@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from ..functions.driver_rows import driver_rows_df
 from ..streaming.incremental import windowed_counts
 from .registry import normalize_event_ts, query
+from .store_kernel import _store_fs, delete_path
 
 
 class _state_partitions:
@@ -1107,22 +1108,15 @@ def st12_stream_gram_store_ingest(
 # crash/replay (a re-run of a committed fold only sweeps leftovers), and     #
 # readers never double-count: they take the newest committed fold plus the  #
 # batch dirs AT OR ABOVE its mark, ignoring folded-but-unswept b dirs.      #
+# All of its IO goes through the path's own Hadoop FileSystem               #
+# (store_kernel._store_fs), never os.listdir/shutil, so the sink round-trips #
+# on hdfs:// and s3a:// exactly like the gram and IVF stores do.            #
 # --------------------------------------------------------------------------- #
-
-
-def _out_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for ``path``'s own scheme. The fold/read
-    maintenance IO below runs through this — NOT os.listdir/shutil — so
-    the ingest sink round-trips on hdfs:// and s3a:// exactly like the
-    gram and IVF stores do (round-14 verdict #1: this was the last repo
-    component pinned to the driver's local disk)."""
-    jp = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jp.getFileSystem(spark._jsc.hadoopConfiguration()), jp
 
 
 def _out_names(spark: SparkSession, out: str) -> "list[str]":
     """Child names of ``out`` (empty if it does not exist yet)."""
-    fs, jp = _out_fs(spark, out)
+    fs, jp = _store_fs(spark, out)
     if not fs.exists(jp):
         return []
     return [st.getPath().getName() for st in fs.listStatus(jp)]
@@ -1132,16 +1126,14 @@ def _fs_rm(spark: SparkSession, path: str) -> None:
     """Best-effort recursive delete (the sweep half of the fold: a failed
     sweep leaves only leftovers that readers already ignore)."""
     try:
-        fs, jp = _out_fs(spark, path)
-        if fs.exists(jp):
-            fs.delete(jp, True)
+        delete_path(spark, path)
     except Exception:  # noqa: BLE001 — sweep is advisory, like rmtree(ignore_errors=True)
         pass
 
 
 def _committed_folds(spark: SparkSession, out: str) -> "list[int]":
     """Versions of committed fold dirs (ascending). Commit = _SUCCESS."""
-    fs, _ = _out_fs(spark, out)
+    fs, _ = _store_fs(spark, out)
     vs = []
     for d in _out_names(spark, out):
         if d.startswith("compacted_v") and d[11:].isdigit() and fs.exists(
@@ -1383,7 +1375,6 @@ def st14_stream_embedding_store_ingest(
         IvfIndex,
         _probe_entries,
         _read_n_vecs,
-        _store_fs,
         append_embedding_store,
         build_ivf_index,
         compact_persisted_embedding_store,

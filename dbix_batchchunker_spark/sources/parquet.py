@@ -10,6 +10,7 @@ demands of chunk work (BatchChunker.pm:109-112).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,6 +33,24 @@ def _bucket_expr(id_name: str, bucket_width: int, min_id: int):
     )
 
 
+@contextmanager
+def dynamic_partition_overwrite(spark: SparkSession):
+    """Run the block with ``spark.sql.sources.partitionOverwriteMode`` set
+    to ``dynamic``, then restore the previous value — or UNSET the conf
+    when it was never set. Restoring an unset conf to an explicit
+    ``static`` would leave a setting behind that the session never had."""
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(conf, None)
+    spark.conf.set(conf, "dynamic")
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, prev)
+
+
 def keyed_overwrite(
     df: DataFrame,
     path: str,
@@ -42,18 +61,13 @@ def keyed_overwrite(
     """Write ``df`` partitioned by key bucket with dynamic partition
     overwrite: only the buckets present in ``df`` are replaced, so a chunked
     rewrite touches exactly the ranges it processed."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with dynamic_partition_overwrite(df.sparkSession):
         (
             df.withColumn("__bucket", _bucket_expr(id_name, bucket_width, min_id))
             .write.partitionBy("__bucket")
             .mode("overwrite")
             .parquet(path)
         )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
 def read_keyed(spark: SparkSession, path: str) -> DataFrame:

@@ -158,6 +158,7 @@ def main():
     from dbix_batchchunker_spark.operators.gram_store import (
         GramPostingsStore,
     )
+    from dbix_batchchunker_spark.operators.store_kernel import delete_path
     from dbix_batchchunker_spark.operators.text import (
         _SSD_N,
         _positional_grams,
@@ -329,8 +330,8 @@ def main():
                         f"ALTER TABLE {store.name} "
                         f"DROP IF EXISTS PARTITION (batch={p})"
                     )
-                    store._fs_delete(
-                        os.path.join(store.path, f"batch={p}")
+                    delete_path(
+                        spark, os.path.join(store.path, f"batch={p}")
                     )
             spark.catalog.refreshTable(store.name)
 

@@ -41,7 +41,6 @@ def run_arm(spark, batchrows: int, classes: int, clusters: int):
         SIM06_NPROBE,
         IvfIndex,
         _probe_entries,
-        _store_fs,
         append_embedding_store,
         build_ivf_index,
         incremental_embedding_near_dups,
@@ -49,6 +48,7 @@ def run_arm(spark, batchrows: int, classes: int, clusters: int):
         norm,
         save_embedding_store,
     )
+    from dbix_batchchunker_spark.operators.store_kernel import _store_fs
     from dbix_batchchunker_spark.streaming.incremental import (
         process_available,
     )

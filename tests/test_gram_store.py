@@ -322,7 +322,7 @@ def test_compact_lease_refuses_second_writer(spark, docs):
         other = GramPostingsStore(
             spark, store.name + "_w2", store.path, store.n_buckets
         )
-        other._acquire_lease()
+        other.lease.acquire()
         with pytest.raises(StoreMaintenanceLockError):
             store.compact()
         with pytest.raises(StoreMaintenanceLockError):
@@ -335,7 +335,7 @@ def test_compact_lease_refuses_second_writer(spark, docs):
         store.compact()
         assert store._tombstones() is None
         # crash repair path 2: a stale lease + force=True in one call
-        other._acquire_lease()
+        other.lease.acquire()
         store.compact(force=True)
         # the lease is released after a successful compact
         fs, jp = store._fs(store.lease_path)
@@ -587,7 +587,7 @@ def test_randomized_lifecycle_matches_model(spark, seed):
                 holder = GramPostingsStore(
                     spark, store.name + "_h", store.path, store.n_buckets
                 )
-                holder._acquire_lease()
+                holder.lease.acquire()
                 one = spark.createDataFrame([(0, "aa bb cc dd")],
                                             "doc_id long, text string")
                 with pytest.raises(StoreMaintenanceLockError):
@@ -1304,7 +1304,7 @@ def test_onboarding_run_guard_blocks_compact_and_retains_on_failure(
 def test_wave_refusal_leaks_no_conf_or_marker(spark):
     """A wave refused at START (maintenance lease in flight) must leave
     the session exactly as it found it: no partitionOverwriteMode leak
-    (the guard is entered BEFORE the conf set) and no retained run
+    (the conf is restored or unset on the way out) and no retained run
     marker (refusing to start is not a failed run — nothing committed,
     nothing to repair)."""
     from dbix_batchchunker_spark.operators.gram_store import (
@@ -1319,7 +1319,7 @@ def test_wave_refusal_leaks_no_conf_or_marker(spark):
     conf = "spark.sql.sources.partitionOverwriteMode"
     prior = spark.conf.get(conf, None)
     # a FOREIGN maintainer's lease (another process's compact): the file,
-    # not _acquire_lease on this instance — _lease_held would pass the
+    # not lease.acquire() on this instance — lease.held would pass the
     # in-process compactor short-circuit and defeat the refusal
     fs, jp = store._fs(store.lease_path)
     try:
@@ -1540,7 +1540,7 @@ def test_persisted_embedding_store_compact_and_roundtrip(spark, tmp_path):
     assert not any(v % 5 == 0 and v < 400 for v in kept_e)
     # no swap residue left behind
     fs, _ = __import__(
-        "dbix_batchchunker_spark.operators.similarity",
+        "dbix_batchchunker_spark.operators.store_kernel",
         fromlist=["_store_fs"],
     )._store_fs(spark, path)
     jp = spark._jvm.org.apache.hadoop.fs.Path
@@ -1607,10 +1607,10 @@ def test_persisted_store_mid_swap_crash_converges(spark, tmp_path):
     - live absent + __old AND __next  -> roll FORWARD (complete swap)
     """
     from dbix_batchchunker_spark.operators.similarity import (
-        _store_fs,
         compact_persisted_embedding_store,
         load_embedding_store,
     )
+    from dbix_batchchunker_spark.operators.store_kernel import _store_fs
 
     path, index, entries, emb = _mk_embedding_store(spark, tmp_path)
     fs, _ = _store_fs(spark, path)
@@ -1665,13 +1665,13 @@ def test_persisted_store_between_halves_window_pairs_correct(
     pair listing EQUALS the fully-compacted listing and (b) the
     compacting re-run converges the store with no residue."""
     from dbix_batchchunker_spark.operators.similarity import (
-        _store_fs,
         _write_entries,
         compact_embedding_store,
         compact_persisted_embedding_store,
         load_embedding_store,
         store_near_dup_pairs,
     )
+    from dbix_batchchunker_spark.operators.store_kernel import _store_fs
 
     path, index, entries, emb = _mk_embedding_store(spark, tmp_path)
     fs, _ = _store_fs(spark, path)
@@ -1733,7 +1733,8 @@ def test_persisted_store_compact_crash_sweep_converges(
     tests pin points A/B by reconstructing the layout; this sweep drives
     the REAL compact and kills it at each of its four swap renames
     (entries live→old, entries next→live, vectors live→old, vectors
-    next→live) via an injected _checked_rename failure. After every
+    next→live) via an injected failure of the persisted-store kernel's
+    _checked_rename (the one rename every swap goes through). After every
     crash point: (a) a plain load succeeds (repairing as needed), and
     (b) an unpatched compacting re-run converges to the clean result —
     survivor count, full pair listing, zero swap residue. The aside
@@ -1741,6 +1742,7 @@ def test_persisted_store_compact_crash_sweep_converges(
     the ordering invariant (live untouched until both __next halves are
     complete)."""
     from dbix_batchchunker_spark.operators import similarity as sim
+    from dbix_batchchunker_spark.operators import store_kernel
 
     path, index, entries, emb = _mk_embedding_store(spark, tmp_path)
     purged = spark.range(0, 300, 5).select(F.col("id").alias("vec_id"))
@@ -1752,7 +1754,7 @@ def test_persisted_store_compact_crash_sweep_converges(
         for r in sim.store_near_dup_pairs(e_clean, v_clean).collect()
     }
 
-    real_rename = sim._checked_rename
+    real_rename = store_kernel._checked_rename
     calls = {"n": 0}
 
     def dying_rename(fs, src, dst):
@@ -1761,10 +1763,10 @@ def test_persisted_store_compact_crash_sweep_converges(
             raise RuntimeError(f"injected crash at swap rename {crash_at}")
         real_rename(fs, src, dst)
 
-    monkeypatch.setattr(sim, "_checked_rename", dying_rename)
+    monkeypatch.setattr(store_kernel, "_checked_rename", dying_rename)
     with pytest.raises(RuntimeError, match="injected crash"):
         sim.compact_persisted_embedding_store(spark, path, purged)
-    monkeypatch.setattr(sim, "_checked_rename", real_rename)
+    monkeypatch.setattr(store_kernel, "_checked_rename", real_rename)
 
     # (a) the store is readable at every crash point (load repairs a
     # half whose live dir is absent)
@@ -1780,7 +1782,7 @@ def test_persisted_store_compact_crash_sweep_converges(
         for r in sim.store_near_dup_pairs(e_c, v_c).collect()
     }
     assert final == expected
-    fs, _ = sim._store_fs(spark, path)
+    fs, _ = store_kernel._store_fs(spark, path)
     jp = spark._jvm.org.apache.hadoop.fs.Path
     for residue in (
         "entries__next", "entries__old", "vectors__next", "vectors__old"
@@ -1799,7 +1801,7 @@ class _CondCreateFS:
         self._fs = fs
 
     def hasPathCapability(self, jp, cap):
-        from dbix_batchchunker_spark.operators.gram_store import (
+        from dbix_batchchunker_spark.operators.store_kernel import (
             CONDITIONAL_CREATE_CAPABILITY,
         )
 
@@ -1820,7 +1822,7 @@ def test_atomic_create_if_absent_routes_by_capability(spark, tmp_path):
     the capability is up (exactly one of two racing maintainers wins),
     createNewFile otherwise, and a NON-exists IO failure re-raises
     instead of reading as 'lease held'."""
-    from dbix_batchchunker_spark.operators.gram_store import (
+    from dbix_batchchunker_spark.operators.store_kernel import (
         _atomic_create_if_absent,
     )
 
@@ -1855,30 +1857,38 @@ def test_embedding_store_lease_release_is_noop_unless_held(
 ):
     """release() is public API: calling it on a lease object that never
     acquired must NOT delete a foreign maintainer's live lease file —
-    that deliberate override is break_lease()."""
+    that deliberate override is break_lease(). Both persisted stores
+    take the kernel's one lease, so the contract runs against each:
+    the gram store's ``store.lease`` and ``EmbeddingStoreLease``."""
     from dbix_batchchunker_spark.operators.gram_store import (
         StoreMaintenanceLockError,
     )
     from dbix_batchchunker_spark.operators.similarity import (
         EmbeddingStoreLease,
-        _store_fs,
     )
+    from dbix_batchchunker_spark.operators.store_kernel import _store_fs
 
-    path = str(tmp_path / "store")
-    holder = EmbeddingStoreLease(spark, path).acquire()
-    fs, _ = _store_fs(spark, path)
-    jp = spark._jvm.org.apache.hadoop.fs.Path(holder.lease_path)
+    leases = {
+        "gram": lambda p: GramPostingsStore(spark, "gs_lease", p).lease,
+        "embedding": lambda p: EmbeddingStoreLease(spark, p),
+    }
+    for kind, make_lease in leases.items():
+        path = str(tmp_path / kind)
+        holder = make_lease(path).acquire()
+        assert holder.lease_path == path + "__maintenance_lease", kind
+        fs, _ = _store_fs(spark, path)
+        jp = spark._jvm.org.apache.hadoop.fs.Path(holder.lease_path)
 
-    bystander = EmbeddingStoreLease(spark, path)
-    bystander.release()  # never acquired — must not touch the file
-    assert fs.exists(jp)
-    with pytest.raises(StoreMaintenanceLockError):
-        bystander.acquire()
+        bystander = make_lease(path)
+        bystander.release()  # never acquired — must not touch the file
+        assert fs.exists(jp), kind
+        with pytest.raises(StoreMaintenanceLockError):
+            bystander.acquire()
 
-    bystander.break_lease()  # the explicit crash-repair override
-    assert not fs.exists(jp)
-    holder.release()  # holder's release after a break is a clean no-op
-    assert not fs.exists(jp)
+        bystander.break_lease()  # the explicit crash-repair override
+        assert not fs.exists(jp), kind
+        holder.release()  # holder's release after a break is a clean no-op
+        assert not fs.exists(jp), kind
 
 
 def test_retrain_embedding_store_fresh_geometry_same_pairs(
@@ -2106,6 +2116,52 @@ def test_repair_crashed_append_restores_then_rerun_succeeds(
     assert repair_crashed_append(spark, path)["residue"] is False
 
 
+@pytest.mark.parametrize("crash_at", [1, 2])
+def test_crashed_append_sidecar_write_repair_leaves_n_vecs_exact(
+    spark, tmp_path, monkeypatch, crash_at
+):
+    """An append that crashes at either of its two sidecar writes (the
+    n_vecs count, then the vec_id watermark) must leave n_vecs equal to
+    the live vector count once repair_crashed_append has run. The count
+    is written BEFORE the watermark, so a crash before the watermark
+    always leaves ids above it and the repair's compact rewrites the
+    count exactly; with the watermark first, a crash between the two
+    left no residue and the count one batch low."""
+    from dbix_batchchunker_spark.operators import similarity as sim
+
+    path, index, entries, emb = _mk_embedding_store(spark, tmp_path)
+    idx = sim.load_ivf_index(spark, f"{path}/index")
+    batch_v = emb.where(F.col("vec_id") % 9 == 2).select(
+        (F.col("vec_id") + 1000).alias("vec_id"),
+        "label",
+        "embedding",
+        "nrm",
+    ).localCheckpoint(eager=True)
+    batch_e = sim._probe_entries(batch_v, idx, sim.SIM06_NPROBE).select(
+        F.col("doc_id").alias("vec_id"),
+        F.col("bucket").alias("centroid_id"),
+    ).localCheckpoint(eager=True)
+
+    real_write = sim.write_sidecar
+    written = []
+
+    def dying_write(spark_, sidecar, value):
+        written.append(sidecar.rsplit("/", 1)[1])
+        if len(written) == crash_at:
+            raise RuntimeError(f"injected crash at sidecar write {crash_at}")
+        real_write(spark_, sidecar, value)
+
+    monkeypatch.setattr(sim, "write_sidecar", dying_write)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        sim.append_embedding_store(path, batch_e, batch_v)
+    monkeypatch.setattr(sim, "write_sidecar", real_write)
+    assert written == ["n_vecs", "vec_id_hwm"][:crash_at]
+
+    sim.repair_crashed_append(spark, path)
+    _, _, v = sim.load_embedding_store(spark, path)
+    assert sim._read_n_vecs(spark, path) == v.count() == 300
+
+
 def test_append_embedding_store_refuses_reused_vec_ids(spark, tmp_path):
     """Round-16 verdict #2: vec_ids are never reused — a reusing append
     refuses LOUDLY against the persisted watermark (the gram store's
@@ -2116,12 +2172,12 @@ def test_append_embedding_store_refuses_reused_vec_ids(spark, tmp_path):
         SIM06_NPROBE,
         _probe_entries,
         _read_vec_hwm,
-        _store_fs,
         append_embedding_store,
         load_embedding_store,
         load_ivf_index,
         verify_embedding_store_watermark,
     )
+    from dbix_batchchunker_spark.operators.store_kernel import _store_fs
 
     path, index, entries, emb = _mk_embedding_store(spark, tmp_path)
     assert _read_vec_hwm(spark, path) == 299
@@ -2220,7 +2276,7 @@ def test_save_ivf_index_leases_composite_store_parent(spark, tmp_path):
     solo = str(tmp_path / "solo_index")
     save_ivf_index(index, solo)
     fs, _ = __import__(
-        "dbix_batchchunker_spark.operators.similarity",
+        "dbix_batchchunker_spark.operators.store_kernel",
         fromlist=["_store_fs"],
     )._store_fs(spark, solo)
     jp = spark._jvm.org.apache.hadoop.fs.Path
@@ -2508,9 +2564,11 @@ def test_checked_rename_raises_and_load_repair_respects_lease(
     )
     from dbix_batchchunker_spark.operators.similarity import (
         EmbeddingStoreLease,
+        load_embedding_store,
+    )
+    from dbix_batchchunker_spark.operators.store_kernel import (
         _checked_rename,
         _store_fs,
-        load_embedding_store,
     )
 
     path, index, entries, emb = _mk_embedding_store(spark, tmp_path)

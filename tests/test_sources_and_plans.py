@@ -239,9 +239,19 @@ def test_jdbc_id_auto_introspection(spark, tmp_path):
 def test_keyed_overwrite_replaces_only_touched_buckets(spark, tmp_path):
     from dbix_batchchunker_spark.sources.parquet import keyed_overwrite, read_keyed
 
+    # an UNSET overwrite-mode conf stays unset: restoring it to an
+    # explicit 'static' would leave a setting the session never had
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(conf, None)
+    spark.conf.unset(conf)
     path = str(tmp_path / "keyed")
     base = spark.range(0, 100).withColumn("v", F.lit("old"))
-    keyed_overwrite(base, path, "id", bucket_width=10)
+    try:
+        keyed_overwrite(base, path, "id", bucket_width=10)
+        assert spark.conf.get(conf, None) is None
+    finally:
+        if prior is not None:
+            spark.conf.set(conf, prior)
     assert read_keyed(spark, path).count() == 100
 
     # rewrite only ids 20-39 (buckets 2 and 3) with new values
